@@ -81,8 +81,7 @@ object GraphSearch {
       k: Int,
       beam: Int,
       rounds: Int): DataFrame = {
-    require(k >= 1 && beam >= k, s"need beam >= k >= 1, got k=$k beam=$beam")
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
+    requireWalk(k, beam, rounds)
     val q = queries.select(col("query_id"), col("qvec"))
     val e = graph.select("src", "dst")
     // no distinct: a (a,b)+(b,a) reciprocal pair yields a duplicate edge
@@ -164,5 +163,115 @@ object GraphSearch {
     }
     graft.vector.TopK.perQueryDistinct(frontier, k)
       .select(col("query_id"), col("vec_id"), col("rank").as("rnk"), col("dist2"))
+  }
+
+  /** [[searchFrom]]'s argument contract, shared with [[searchFromLocal]]. */
+  private[index] def requireWalk(k: Int, beam: Int, rounds: Int): Unit = {
+    require(k >= 1 && beam >= k, s"need beam >= k >= 1, got k=$k beam=$beam")
+    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
+  }
+
+  /** A layer collected to the driver for [[searchFromLocal]]: member ids
+    * and embeddings, and the adjacency [[searchFrom]]'s `und` relation
+    * holds — every edge in both directions plus one self-loop per member —
+    * as distinct member indices. Edges with an endpoint outside the
+    * members are left out: the DataFrame walk drops them at its scoring
+    * join. Member ids must be distinct. */
+  private[index] final class LocalGraph(
+      val ids: Array[Long],
+      val vecs: Array[Array[Float]],
+      src: Array[Long],
+      dst: Array[Long]) {
+    val index: scala.collection.mutable.LongMap[Int] = {
+      val m = new scala.collection.mutable.LongMap[Int](ids.length * 2)
+      ids.indices.foreach(i => m.update(ids(i), i))
+      m
+    }
+    val adj: Array[Array[Int]] = {
+      val b = Array.tabulate(ids.length) { i =>
+        val a = new scala.collection.mutable.ArrayBuilder.ofInt
+        a += i
+        a
+      }
+      var e = 0
+      while (e < src.length) {
+        val s = index.getOrElse(src(e), -1)
+        val d = index.getOrElse(dst(e), -1)
+        if (s >= 0 && d >= 0) { b(s) += d; b(d) += s }
+        e += 1
+      }
+      b.map(_.result().distinct)
+    }
+  }
+
+  /** The rank-ordered result of one driver walk: `ids(i)` at rank `i + 1`. */
+  private[index] final class Ranked(val ids: Array[Long], val dists: Array[Double])
+
+  /** Per-thread scratch for [[searchFromLocal]] over one [[LocalGraph]]:
+    * stamps that dedupe each hop's candidates and cache each node's
+    * distance for the current query, so a walk allocates nothing
+    * graph-sized. */
+  private[index] final class WalkScratch(g: LocalGraph) {
+    private[GraphSearch] val seen = new Array[Int](g.ids.length)
+    private[GraphSearch] val scoredFor = new Array[Int](g.ids.length)
+    private[GraphSearch] val dist = new Array[Double](g.ids.length)
+    private[GraphSearch] var hop = 0
+    private[GraphSearch] var query = 0
+  }
+
+  /** Driver twin of [[searchFrom]] for ONE query over a collected layer —
+    * the same result, bit for bit: the seeds present in the layer form
+    * the first frontier (whether or not they score), every hop expands
+    * the frontier over the symmetrized adjacency with self-loops, scores
+    * each distinct candidate with [[graft.vector.L2Squared]]'s arithmetic
+    * (unscorable candidates — a null or length-mismatched vector — drop,
+    * as the heap drops NULL distances) and keeps the `beam` best by
+    * `(dist2, vec_id)`; the top `k` of the last frontier is returned. The
+    * caller checks the arguments once with [[requireWalk]]. */
+  private[index] def searchFromLocal(
+      g: LocalGraph,
+      scratch: WalkScratch,
+      qvec: Array[Float],
+      seeds: Array[Long],
+      k: Int,
+      beam: Int,
+      rounds: Int): Ranked = {
+    scratch.query += 1
+    def distOf(i: Int): Double = {
+      if (scratch.scoredFor(i) != scratch.query) {
+        scratch.scoredFor(i) = scratch.query
+        scratch.dist(i) = graft.vector.L2Squared.of(g.vecs(i), qvec)
+      }
+      scratch.dist(i)
+    }
+    var frontier: Array[Int] = seeds.iterator
+      .map(id => g.index.getOrElse(id, -1)).filter(_ >= 0).toArray.distinct
+    val ds = new Array[Double](beam)
+    val ids = new Array[Long](beam)
+    var n = 0
+    var r = 0
+    while (r < rounds) {
+      scratch.hop += 1
+      n = 0
+      var f = 0
+      while (f < frontier.length) {
+        val nbrs = g.adj(frontier(f))
+        var j = 0
+        while (j < nbrs.length) {
+          val c = nbrs(j)
+          if (scratch.seen(c) != scratch.hop) {
+            scratch.seen(c) = scratch.hop
+            val d = distOf(c)
+            if (!d.isNaN) n = graft.vector.TopK.offer(ds, ids, n, beam, d, g.ids(c))
+          }
+          j += 1
+        }
+        f += 1
+      }
+      frontier = Array.tabulate(n)(i => g.index(ids(i)))
+      r += 1
+    }
+    val m = math.min(k, n)
+    new Ranked(java.util.Arrays.copyOf(ids, m), java.util.Arrays.copyOf(ds, m))
   }
 }

@@ -24,6 +24,20 @@ import org.apache.spark.sql.functions._
   * the layer count, the classic HNSW argument; nothing data-sized is
   * ever broadcast (the per-layer walks inherit GraphSearch's plan
   * shape: graph shuffles once on src, exchange reused across hops).
+  *
+  * Two execution paths, one result. When every layer of the stack and
+  * the call's input fit the driver — at most `HnswLocal.MaxNodes` rows,
+  * the largest stack the driver path was measured at, and within
+  * `KMeans.LocalFitThresholdDefault` floats (rows × dim) per relation, the
+  * bound the IVF build and k-means already use to go local —
+  * [[search]], [[insert]] and [[delete]] settle the size with one
+  * counting job, collect each layer once and run their walks and repairs
+  * in driver arrays ([[HnswLocal]], walking with
+  * [[GraphSearch.searchFromLocal]]): a handful of jobs per call instead
+  * of a Spark job per hop, attach and clique repair. Above the bound the
+  * DataFrame plans below run unchanged, after that one counting job; they
+  * are also the driver path's parity oracle (bit-identical rows, stacks
+  * and deltas; parity tests in `HnswSpec`).
   */
 object Hnsw {
 
@@ -107,13 +121,13 @@ object Hnsw {
     Layer(nodes, graph)
   }
 
-  private def emptyIdsDf(spark: org.apache.spark.sql.SparkSession, name: String): DataFrame =
+  private[index] def emptyIdsDf(spark: org.apache.spark.sql.SparkSession, name: String): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField(name, org.apache.spark.sql.types.LongType))))
 
-  private def emptyNodesDf(spark: org.apache.spark.sql.SparkSession): DataFrame =
+  private[index] def emptyNodesDf(spark: org.apache.spark.sql.SparkSession): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(Seq(
@@ -244,8 +258,9 @@ object Hnsw {
     * oversized top only via the nextN == 0 hash fluke; [[insert]] grows
     * the top by the hash-expected trickle but NEVER re-checks — across
     * many batches the bound erodes silently. One cheap check (build
-    * passes the count its loop already holds; insert counts a tiny
-    * localCheckpoint'd top) turns both into a loud signal: past `topCap`
+    * passes the count its loop already holds; insert's driver path its
+    * collected top plus joiners, its DataFrame form a count of the grown
+    * top) turns both into a loud signal: past `topCap`
     * the caller should [[deepen]] (one new level re-bounds it) rather
     * than keep broadcasting an n-sized relation. */
   private def warnIfTopOversized(topN: Long, topCap: Long, op: String): Unit =
@@ -297,7 +312,12 @@ object Hnsw {
     * |batch|·k touched nodes × ≤(k + |arrivals|) candidate edges each,
     * all distances reused from the walk/graph (no re-scoring joins) —
     * nothing data-sized moves, so micro-batch maintenance stays
-    * micro-batch priced at any corpus size. Intra-batch edges are not
+    * micro-batch priced at any corpus size. A stack within the driver
+    * budget (see the object header) is collected once and descended,
+    * attached and repaired in driver arrays; the new top's size then
+    * comes from the collected top plus its joiners, with no count job.
+    * Above the budget the walks and repairs are Spark jobs whose
+    * batch-sized results are checkpointed. Intra-batch edges are not
     * created on insert (candidates come from the existing members); a
     * subsequent [[KnnJoin.nnDescentRound]] — the maintenance operator —
     * recovers them, mirroring how the reference's per-row inserts only
@@ -352,6 +372,28 @@ object Hnsw {
       wantDelta: Boolean): (Seq[Layer], Option[Seq[LayerDelta]]) = {
     require(layers.nonEmpty, "empty layer stack")
     require(k >= 1 && beam >= k && shrink >= 2, s"bad k=$k beam=$beam shrink=$shrink")
+    HnswLocal.insert(layers, batch, k, beam, rounds, shrink, perLayerK, validate) match {
+      case Some(done) =>
+        warnIfTopOversized(done.topNodes, topCap, "insert")
+        (done.layers, if (wantDelta) Some(done.deltas) else None)
+      case None =>
+        insertPlan(layers, batch, k, beam, rounds, shrink, topCap, perLayerK, validate, wantDelta)
+    }
+  }
+
+  /** [[insertImpl]]'s DataFrame form: the stack above the driver budget,
+    * and the parity oracle of the driver path. */
+  private def insertPlan(
+      layers: Seq[Layer],
+      batch: DataFrame,
+      k: Int,
+      beam: Int,
+      rounds: Int,
+      shrink: Int,
+      topCap: Long,
+      perLayerK: Int,
+      validate: Boolean,
+      wantDelta: Boolean): (Seq[Layer], Option[Seq[LayerDelta]]) = {
     val L = layers.length
     val newRows = batch.select(col("vec_id"), col("embedding"))
     // loud micro-batch-sized guards instead of silent corruption: a
@@ -531,9 +573,13 @@ object Hnsw {
     *    0.96 where the member budget measured 0.69; the gap is seed
     *    entry, not repair quality, and no repair closes it).
     *
-    * Unknown ids are a no-op (O9's contract). Work is bounded by the
-    * touched set: ≤ |deleted|·2k nodes × ≤ (2k)² clique-candidate
-    * edges per deleted id — nothing data-sized moves. Ids absent from a layer
+    * Unknown ids are a no-op (O9's contract). Scale shape: work is
+    * bounded by the touched set: ≤ |deleted|·2k nodes × ≤ (2k)²
+    * clique-candidate edges per deleted id — nothing data-sized moves. A
+    * stack within the driver budget (see the object header) runs the
+    * neighborhood scan, clique and re-selection over its collected
+    * layers in driver arrays; above it each layer's repair is a chain of
+    * joins whose batch-sized result is checkpointed. Ids absent from a layer
     * simply don't affect it (nesting keeps layers consistent because
     * membership is a pure hash rule over surviving ids). Like
     * [[insert]], only the batch-sized repaired block is materialized;
@@ -570,6 +616,19 @@ object Hnsw {
       wantDelta: Boolean): (Seq[Layer], Option[Seq[LayerDelta]]) = {
     require(layers.nonEmpty, "empty layer stack")
     require(k >= 1, s"k must be >= 1, got $k")
+    HnswLocal.delete(layers, ids, k) match {
+      case Some((shrunk, deltas)) => (shrunk, if (wantDelta) Some(deltas) else None)
+      case None                   => deletePlan(layers, ids, k, wantDelta)
+    }
+  }
+
+  /** [[deleteImpl]]'s DataFrame form: the stack above the driver budget,
+    * and the parity oracle of the driver path. */
+  private def deletePlan(
+      layers: Seq[Layer],
+      ids: DataFrame,
+      k: Int,
+      wantDelta: Boolean): (Seq[Layer], Option[Seq[LayerDelta]]) = {
     val del = graft.CacheScope.track(ids.select(col("vec_id")).distinct().cache())
     // per-layer repair blocks are fully INDEPENDENT (no cross-layer
     // dependency — membership is the pure hash rule), and each pays two
@@ -1260,15 +1319,20 @@ object Hnsw {
     * `rnk ≤ k`. `perLayerK` controls how many carriers descend (HNSW's
     * ef at the upper layers).
     *
-    * Execution caveat (stacks of ≥ 3 layers only): the per-layer seed
-    * handoff is lineage-truncated via a LAZY `localCheckpoint` — the
-    * plan is truncated at construction (the measured super-linear
-    * Catalyst re-analysis fix, [[insert]]'s tradeoff shared here) but
-    * the mid-layer walks run at the FIRST action, and the checkpointed
-    * seed blocks are then executor-resident and non-recomputable: a
-    * long-lived plan breaks if executors are lost. Construct the plan
-    * close to its action; a 1–2 layer stack stays pure plan
-    * construction. */
+    * Execution: a stack within the driver budget (see the object
+    * header) is searched when the call is made — its layers and the
+    * queries are collected and walked on the driver, and the result is a
+    * local relation, so the returned frame re-runs nothing. Above the
+    * budget the call runs the one counting job that finds the stack too
+    * large, then builds a plan, and one caveat holds for stacks of
+    * ≥ 3 layers: the per-layer seed handoff is lineage-truncated via a
+    * LAZY `localCheckpoint` — the plan is truncated at construction (the
+    * measured super-linear Catalyst re-analysis fix, [[insert]]'s
+    * tradeoff shared here) but the mid-layer walks run at the FIRST
+    * action, and the checkpointed seed blocks are then executor-resident
+    * and non-recomputable: a long-lived plan breaks if executors are
+    * lost. Construct the plan close to its action; past the counting
+    * job, a 1–2 layer stack over the budget is pure plan construction. */
   def search(
       queries: DataFrame,
       layers: Seq[Layer],
@@ -1278,6 +1342,19 @@ object Hnsw {
       perLayerK: Int = 8): DataFrame = {
     require(layers.nonEmpty, "empty layer stack")
     require(k >= 1 && beam >= k && perLayerK >= 1, s"bad k=$k beam=$beam perLayerK=$perLayerK")
+    HnswLocal.search(queries, layers, k, beam, rounds, perLayerK)
+      .getOrElse(searchPlan(queries, layers, k, beam, rounds, perLayerK))
+  }
+
+  /** [[search]]'s DataFrame form: the stack above the driver budget, and
+    * the parity oracle of the driver path. */
+  private def searchPlan(
+      queries: DataFrame,
+      layers: Seq[Layer],
+      k: Int,
+      beam: Int,
+      rounds: Int,
+      perLayerK: Int): DataFrame = {
     val q = queries.select(col("query_id"), col("qvec"))
     // top layer: every member is a seed candidate (the layer is
     // topCap-bounded by the build — this is a broadcast-sized relation)

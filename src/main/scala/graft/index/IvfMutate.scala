@@ -19,21 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object IvfMutate {
 
-  /** Fold per-partition probe hits of a finished query batch into the
-    * metadata (reference `bp.hits += 1` per probed partition,
-    * quake_min.py:155; `query_counter` bump, quake_min.py:148). */
-  def recordHits(model: IvfModel, probes: DataFrame, nQueries: Long): IvfModel = {
-    val hitCounts = probes
-      .groupBy("partition_id")
-      .agg(count(lit(1)).as("h"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
-    model.copy(
-      partitions = model.partitions.map(p => p.copy(hits = p.hits + hitCounts.getOrElse(p.pid, 0L))),
-      queryCounter = model.queryCounter + nQueries)
-  }
-
   /** Batch insert.
     *
     * Wrong-dimension vectors are rejected up front (the reference would

@@ -366,13 +366,6 @@ object IvfSearch {
       .collect()
   }
 
-  /** Per-query probe metrics (reference result `meta`, quake_min.py:168):
-    * `(query_id, nprobe, scanned)`. */
-  def probeMetrics(probes: DataFrame): DataFrame =
-    probes
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("nprobe"), sum(col("psize")).as("scanned"))
-
   /** Brute-force exact top-k over the whole collection (reference
     * `exact_topk`, quake_min.py:212-215) — the ground-truth oracle. */
   def exactTopK(vectors: DataFrame, queries: DataFrame, k: Int): DataFrame =

@@ -78,3 +78,23 @@ case class L2Squared(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): L2Squared =
     copy(left = newLeft, right = newRight)
 }
+
+object L2Squared {
+  /** The expression's arithmetic over driver-side arrays — each element
+    * widened to double before subtracting, summed in index order — so a
+    * driver-resident path scores bit-identically to the Catalyst plan.
+    * NaN stands in for the expression's NULL (a null or
+    * length-mismatched input). */
+  def of(a: Array[Float], b: Array[Float]): Double =
+    if (a == null || b == null || a.length != b.length) Double.NaN
+    else {
+      var s = 0.0
+      var i = 0
+      while (i < a.length) {
+        val d = a(i).toDouble - b(i).toDouble
+        s += d * d
+        i += 1
+      }
+      s
+    }
+}

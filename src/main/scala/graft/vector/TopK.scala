@@ -28,34 +28,14 @@ class TopKAgg(k: Int) extends Aggregator[(Long, Double, Long), TopKBuf, Seq[(Dou
 
   override def zero: TopKBuf = TopKBuf(0, new Array[Double](k), new Array[Long](k))
 
-  /** Insert (d, id) into the sorted prefix, dropping the worst on overflow. */
-  private def insert(b: TopKBuf, d: Double, id: Long): Unit = {
-    val ds = b.ds
-    val ids = b.ids
-    if (b.n < k) {
-      var j = b.n
-      while (j > 0 && (d < ds(j - 1) || (d == ds(j - 1) && id < ids(j - 1)))) {
-        ds(j) = ds(j - 1); ids(j) = ids(j - 1); j -= 1
-      }
-      ds(j) = d; ids(j) = id
-      b.n += 1
-    } else if (d < ds(k - 1) || (d == ds(k - 1) && id < ids(k - 1))) {
-      var j = k - 1
-      while (j > 0 && (d < ds(j - 1) || (d == ds(j - 1) && id < ids(j - 1)))) {
-        ds(j) = ds(j - 1); ids(j) = ids(j - 1); j -= 1
-      }
-      ds(j) = d; ids(j) = id
-    }
-  }
-
   override def reduce(b: TopKBuf, a: (Long, Double, Long)): TopKBuf = {
-    insert(b, a._2, a._3)
+    b.n = TopK.offer(b.ds, b.ids, b.n, k, a._2, a._3)
     b
   }
 
   override def merge(x: TopKBuf, y: TopKBuf): TopKBuf = {
     var i = 0
-    while (i < y.n) { insert(x, y.ds(i), y.ids(i)); i += 1 }
+    while (i < y.n) { x.n = TopK.offer(x.ds, x.ids, x.n, k, y.ds(i), y.ids(i)); i += 1 }
     x
   }
 
@@ -97,6 +77,29 @@ class TopKDistinctAgg(k: Int) extends TopKAgg(k) {
 }
 
 object TopK {
+  /** Insert `(d, id)` into the ascending `(d, id)`-sorted prefix
+    * `ds/ids(0 until n)` of a `k`-slot buffer, dropping the worst on
+    * overflow; returns the new prefix length. The one ordering the
+    * aggregators above and the driver-side HNSW walks share. */
+  def offer(ds: Array[Double], ids: Array[Long], n: Int, k: Int, d: Double, id: Long): Int =
+    if (n < k) {
+      var j = n
+      while (j > 0 && (d < ds(j - 1) || (d == ds(j - 1) && id < ids(j - 1)))) {
+        ds(j) = ds(j - 1); ids(j) = ids(j - 1); j -= 1
+      }
+      ds(j) = d; ids(j) = id
+      n + 1
+    } else {
+      if (d < ds(k - 1) || (d == ds(k - 1) && id < ids(k - 1))) {
+        var j = k - 1
+        while (j > 0 && (d < ds(j - 1) || (d == ds(j - 1) && id < ids(j - 1)))) {
+          ds(j) = ds(j - 1); ids(j) = ids(j - 1); j -= 1
+        }
+        ds(j) = d; ids(j) = id
+      }
+      n
+    }
+
   /** Per-query top-k over candidate rows `(query_id, dist2, vec_id, ...)`
     * via [[TopKAgg]]. Output matches the window form bit-for-bit:
     * `(query_id, rank, vec_id, dist2)`. */

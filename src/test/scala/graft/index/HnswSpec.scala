@@ -1,6 +1,9 @@
 package graft.index
 
 import graft.SparkSpec
+import graft.vector.KMeans
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 class HnswSpec extends SparkSpec {
@@ -609,6 +612,250 @@ class HnswSpec extends SparkSpec {
       val gr = one.graph.select("src", "dst", "rnk")
       val gDiff = gl.exceptAll(gr).unionAll(gr.exceptAll(gl)).count()
       assert(gDiff == 0, s"trial $trial: edge multisets diverge (diff $gDiff)")
+    }
+  }
+
+  // ---- driver path vs DataFrame path ------------------------------------
+  // Parity of the driver-resident path (HnswLocal) with the DataFrame form:
+  // each call runs twice — under the default driver budget and with
+  // `KMeans.localFitThreshold = 0`, which admits nothing and forces the
+  // DataFrame path — and the rows, stacks and deltas must be identical.
+
+  private def materialized(layers: Seq[Hnsw.Layer]): Seq[Hnsw.Layer] =
+    layers.map(l => Hnsw.Layer(l.nodes.localCheckpoint(), l.graph.localCheckpoint()))
+
+  private lazy val oneLayer =
+    materialized(Hnsw.build(emb.filter(col("vec_id") < 60), k = 4, shrink = 16, topCap = 256L))
+  private lazy val twoLayers = materialized(Hnsw.build(emb, k = 6, shrink = 16, topCap = 256L))
+  private lazy val threeLayers = materialized(Hnsw.build(emb, k = 6, shrink = 4, topCap = 40L))
+
+  private def stacks = Seq(1 -> oneLayer, 2 -> twoLayers, 3 -> threeLayers)
+
+  private def withBudget[T](floats: Long)(body: => T): T = {
+    KMeans.localFitThreshold = floats
+    try body
+    finally KMeans.localFitThreshold = KMeans.LocalFitThresholdDefault
+  }
+
+  /** `(driver path, DataFrame path)` results of one call. */
+  private def bothPaths[T](call: => T): (T, T) = (call, withBudget(0L)(call))
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
+      case v                          => String.valueOf(v)
+    }.mkString("|")).toSeq.sorted
+
+  private def searchRows(df: DataFrame): Seq[String] =
+    rows(df.select("query_id", "vec_id", "rnk", "dist2"))
+
+  private def assertStacksEqual(a: Seq[Hnsw.Layer], b: Seq[Hnsw.Layer], what: String): Unit = {
+    assert(a.length == b.length, s"$what: depth ${a.length} vs ${b.length}")
+    a.zip(b).zipWithIndex.foreach { case ((x, y), p) =>
+      assert(rows(x.nodes.select("vec_id", "embedding")) == rows(y.nodes.select("vec_id", "embedding")),
+        s"$what: layer $p node sets differ")
+      val cols = Seq("src", "dst", "rnk", "dist2").map(col)
+      assert(rows(x.graph.select(cols: _*)) == rows(y.graph.select(cols: _*)),
+        s"$what: layer $p edge sets differ")
+    }
+  }
+
+  private def assertDeltasEqual(a: Seq[Hnsw.LayerDelta], b: Seq[Hnsw.LayerDelta], what: String): Unit = {
+    assert(a.length == b.length, s"$what: delta depth ${a.length} vs ${b.length}")
+    a.zip(b).zipWithIndex.foreach { case ((x, y), p) =>
+      assert(rows(x.nodesAdded.select("vec_id", "embedding")) == rows(y.nodesAdded.select("vec_id", "embedding")),
+        s"$what: layer $p nodesAdded differ")
+      assert(rows(x.nodesRemoved.select("vec_id")) == rows(y.nodesRemoved.select("vec_id")),
+        s"$what: layer $p nodesRemoved differ")
+      assert(rows(x.graphUpserts.select("src", "dst", "rnk", "dist2")) ==
+        rows(y.graphUpserts.select("src", "dst", "rnk", "dist2")), s"$what: layer $p graphUpserts differ")
+      assert(rows(x.srcsRemoved.select("src")) == rows(y.srcsRemoved.select("src")),
+        s"$what: layer $p srcsRemoved differ")
+    }
+  }
+
+  private def isLocal(df: DataFrame): Boolean = df.queryExecution.logical.isInstanceOf[LocalRelation]
+
+  /** Member probes nudged off their member (so no distance-0 snap). */
+  private def nudgedProbes(ids: Column): DataFrame =
+    emb.filter(ids)
+      .select(col("vec_id").as("query_id"),
+        transform(col("embedding"), x => x + lit(0.01f)).as("qvec"))
+
+  private def nearDups(offset: Long, ids: Seq[Long]): DataFrame =
+    emb.filter(col("vec_id").isin(ids: _*))
+      .select((col("vec_id") + offset).as("vec_id"),
+        transform(col("embedding"), x => x + lit(0.001f)).as("embedding"))
+
+  test("the stacks under test are 1, 2 and 3 layers deep") {
+    assert(stacks.forall { case (n, st) => st.length == n }, s"depths ${stacks.map(_._2.length)}")
+  }
+
+  test("search: driver walk returns the DataFrame walk's rows on 1-, 2- and 3-layer stacks") {
+    stacks.foreach { case (n, st) =>
+      val q = nudgedProbes(col("vec_id") % 7 === 0 && col("vec_id") < 60)
+      Seq((5, 16, 6, 8), (3, 8, 2, 1), (10, 32, 3, 4)).foreach { case (k, beam, rounds, plk) =>
+        val (local, plan) = bothPaths(Hnsw.search(q, st, k = k, beam = beam, rounds = rounds, perLayerK = plk))
+        assert(isLocal(local) && !isLocal(plan), s"$n layers: wrong paths taken")
+        val want = searchRows(plan)
+        assert(want.nonEmpty)
+        assert(searchRows(local) == want, s"$n layers, k=$k beam=$beam rounds=$rounds perLayerK=$plk")
+      }
+    }
+  }
+
+  test("search: k larger than a layer, and top seeds absent from the layer below") {
+    // k > |layer|: every member of the 60-node single layer, ranked
+    val q = nudgedProbes(col("vec_id") < 3)
+    val (local, plan) = bothPaths(Hnsw.search(q, oneLayer, k = 80, beam = 100, rounds = 4))
+    assert(searchRows(local) == searchRows(plan))
+    assert(local.filter(col("query_id") === 0).count() == 60L)
+    // plant top members that the layer below does not hold, right on the
+    // probes: they win the top seeding and must drop out of the walk
+    val phantoms = emb.filter(col("vec_id") < 3)
+      .select((col("vec_id") + 800000000L).as("vec_id"), col("embedding"))
+    val top = twoLayers.head
+    val skewed = Hnsw.Layer(top.nodes.unionByName(phantoms), top.graph) +: twoLayers.tail
+    val (l2, p2) = bothPaths(Hnsw.search(q, skewed, k = 5, beam = 16, rounds = 6, perLayerK = 4))
+    assert(searchRows(l2) == searchRows(p2))
+    assert(l2.filter(col("vec_id") >= 800000000L).isEmpty)
+  }
+
+  test("insert: identical stacks and deltas on both paths, including rows joining the top") {
+    stacks.foreach { case (n, st) =>
+      val shrink = if (n == 3) 4 else 16
+      val topMod = (1 until st.length).foldLeft(1L)((m, _) => m * shrink)
+      // a few ids that the level rule routes to every layer, plus
+      // ordinary ones
+      val high = spark.range(500000000L, 500100000L)
+        .filter(pmod(xxhash64(col("id")), lit(topMod)) === 0).limit(3).as[Long].collect()
+      val batch = nearDups(700000000L, Seq(1L, 2L, 3L, 40L, 41L))
+        .unionByName(high.toSeq.zip(Seq(5L, 6L, 7L)).toDF("vec_id", "src")
+          .join(emb.withColumnRenamed("vec_id", "src"), "src")
+          .select(col("vec_id"), transform(col("embedding"), x => x + lit(0.002f)).as("embedding")))
+      val ((lst, ld), (pst, pd)) =
+        bothPaths(Hnsw.insertWithDelta(st, batch, k = 6, beam = 16, rounds = 3, shrink = shrink))
+      assertStacksEqual(lst, pst, s"insert, $n layers")
+      assertDeltasEqual(ld, pd, s"insert, $n layers")
+      // and the grown stacks keep answering identically
+      val q = nudgedProbes(col("vec_id") < 8)
+      assert(searchRows(Hnsw.search(q, lst, k = 4, beam = 16, rounds = 4)) ==
+        searchRows(withBudget(0L)(Hnsw.search(q, pst, k = 4, beam = 16, rounds = 4))),
+        s"search after insert, $n layers")
+    }
+  }
+
+  test("insert: duplicate and already-present ids fail with the same message on both paths") {
+    val dup = nearDups(600000000L, Seq(1L, 2L)).unionByName(nearDups(600000000L, Seq(1L)))
+    val present = nearDups(0L, Seq(3L))
+    Seq(dup -> "duplicate", present -> "already present").foreach { case (b, what) =>
+      val (a, c) = bothPaths(
+        intercept[IllegalArgumentException](Hnsw.insert(twoLayers, b, k = 6, beam = 16, rounds = 2)).getMessage)
+      assert(a == c && a.contains(what), s"$what: driver '$a' vs DataFrame '$c'")
+    }
+  }
+
+  test("delete: identical stacks and deltas on both paths, unknown ids a no-op") {
+    stacks.foreach { case (n, st) =>
+      val ids = Seq(0L, 5L, 17L, 33L, 40L, 123456789L, 5L).toDF("vec_id")
+      val ((lst, ld), (pst, pd)) = bothPaths(Hnsw.deleteWithDelta(st, ids, k = 6))
+      assertStacksEqual(lst, pst, s"delete, $n layers")
+      assertDeltasEqual(ld, pd, s"delete, $n layers")
+      val (unknown, unknownPlan) = bothPaths(Hnsw.delete(st, Seq(987654321L).toDF("vec_id"), k = 6))
+      assertStacksEqual(unknown, unknownPlan, s"unknown-id delete, $n layers")
+      assertStacksEqual(unknown, st, s"unknown-id delete changes nothing, $n layers")
+    }
+  }
+
+  test("delete: emptying the top layer matches, and search over the emptied stack matches") {
+    val topIds = threeLayers.head.nodes.select("vec_id")
+    val (local, plan) = bothPaths(Hnsw.delete(threeLayers, topIds, k = 6))
+    assert(local.head.nodes.isEmpty && plan.head.nodes.isEmpty)
+    assertStacksEqual(local, plan, "top-emptying delete")
+    val q = nudgedProbes(col("vec_id") < 5)
+    val (a, b) = bothPaths(Hnsw.search(q, local, k = 3, beam = 8, rounds = 2))
+    assert(searchRows(a) == searchRows(b))
+  }
+
+  test("size gate: a stack over the driver budget takes the DataFrame path with the same rows") {
+    val q = nudgedProbes(col("vec_id") < 10)
+    // room for the 2-layer stack's top (~30 rows at 64 floats) but not its
+    // 500-row bottom layer
+    val over = withBudget(100L * 64)(Hnsw.search(q, twoLayers, k = 5, beam = 16, rounds = 4))
+    val under = Hnsw.search(q, twoLayers, k = 5, beam = 16, rounds = 4)
+    assert(!isLocal(over) && isLocal(under))
+    assert(searchRows(over) == searchRows(under))
+  }
+
+  test("size gate: an over-budget call runs one counting job — no layer row moves") {
+    val q = nudgedProbes(col("vec_id") < 10)
+    val sc = spark.sparkContext
+    def jobsOf(group: String)(call: => Option[DataFrame]): (Option[DataFrame], Int) = {
+      sc.setJobGroup(group, group)
+      val out = try call finally sc.clearJobGroup()
+      (out, sc.statusTracker.getJobIdsForGroup(group).length)
+    }
+    val (over, overJobs) = jobsOf("hnsw-over-budget")(
+      withBudget(100L * 64)(HnswLocal.search(q, twoLayers, k = 5, beam = 16, rounds = 4, perLayerK = 8)))
+    assert(over.isEmpty && overJobs == 1, s"over budget: ${overJobs} jobs")
+    // under the budget the same counting job precedes one read per relation
+    val (under, underJobs) = jobsOf("hnsw-under-budget")(
+      HnswLocal.search(q, twoLayers, k = 5, beam = 16, rounds = 4, perLayerK = 8))
+    assert(under.isDefined && underJobs == 1 + 1 + 2 * twoLayers.length, s"under budget: $underJobs jobs")
+  }
+
+  test("non-finite vectors and NaN edge distances take the DataFrame path") {
+    // the DataFrame heaps keep NaN distances in arrival order, which no
+    // driver heap reproduces: such inputs must never walk on the driver
+    def poisoned(v: Column, x: Float): Column =
+      transform(v, (e, i) => when(i === 0, lit(x)).otherwise(e))
+    Seq(Float.NaN, Float.PositiveInfinity).foreach { x =>
+      val q = nudgedProbes(col("vec_id") < 6)
+        .withColumn("qvec", when(col("query_id") === 2, poisoned(col("qvec"), x)).otherwise(col("qvec")))
+      assert(HnswLocal.search(q, twoLayers, k = 5, beam = 16, rounds = 4, perLayerK = 8).isEmpty, s"query $x")
+      assert(!isLocal(Hnsw.search(q, twoLayers, k = 5, beam = 16, rounds = 4)), s"query $x")
+      val batch = nearDups(620000000L, Seq(1L, 2L))
+        .withColumn("embedding",
+          when(col("vec_id") === 620000001L, poisoned(col("embedding"), x)).otherwise(col("embedding")))
+      assert(HnswLocal.insert(twoLayers, batch, 6, 16, 2, 16, 8, validate = true).isEmpty, s"insert $x")
+      val bottom = twoLayers.last
+      val poisonedNodes = bottom.nodes.withColumn("embedding",
+        when(col("vec_id") === 7L, poisoned(col("embedding"), x)).otherwise(col("embedding")))
+      val st = twoLayers.init :+ Hnsw.Layer(poisonedNodes, bottom.graph)
+      assert(HnswLocal.delete(st, Seq(5L).toDF("vec_id"), k = 6).isEmpty, s"layer vector $x")
+    }
+    val bottom = twoLayers.last
+    val nanEdge = bottom.graph.withColumn("dist2",
+      when(col("src") === bottom.graph.select(min("src")).head().getLong(0) && col("rnk") === 1, lit(Double.NaN))
+        .otherwise(col("dist2")))
+    val st = twoLayers.init :+ Hnsw.Layer(bottom.nodes, nanEdge)
+    assert(HnswLocal.delete(st, Seq(5L).toDF("vec_id"), k = 6).isEmpty, "NaN edge distance")
+    assert(HnswLocal.delete(twoLayers, Seq(5L).toDF("vec_id"), k = 6).isDefined, "clean stack")
+  }
+
+  test("insert's oversized-top warning fires on both paths with the same top size") {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("hnsw-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val logger = org.apache.logging.log4j.LogManager.getLogger("graft.index.Hnsw$").asInstanceOf[Logger]
+    logger.addAppender(app)
+    try {
+      val batch = nearDups(610000000L, Seq(1L, 2L))
+      def warned(): Seq[String] = {
+        seen.clear()
+        Hnsw.insert(twoLayers, batch, k = 6, beam = 16, rounds = 2, topCap = 1L)
+        seen.toArray(Array.empty[String]).toSeq.filter(_.contains("Hnsw.insert left a top layer"))
+      }
+      val (local, plan) = bothPaths(warned())
+      assert(local.size == 1 && local == plan, s"driver $local vs DataFrame $plan")
+    } finally {
+      logger.removeAppender(app)
+      app.stop()
     }
   }
 }
